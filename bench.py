@@ -247,17 +247,6 @@ def bench_prereduce_ab(spark) -> dict[str, float | int]:
     return out
 
 
-# The single-shot v2 (transformWithStateInPandas) throughput bench was
-# REMOVED in r13 (VERDICT r12 what's-wrong #2): one drip through the v2
-# transport printed 2,581 rows/s in r12 vs 4,044 in r11 on identical
-# code — the number rode host load and drip config, reading as a 36%
-# regression that wasn't one. The controlled A/B
-# (tools/stateful_ab.py, min-of-2, palindromic order, swept over
-# micro-batch count and key cardinality — STATEFUL_AB_r12.md) is the
-# only meaningful v2 signal; v1≡v2 semantics stay pinned by
-# tests/test_state_v2.py.
-
-
 def bench_calibration(spark) -> float:
     """Fixed-work host-speed probe (r13, VERDICT r12 next-round #3):
     a deterministic shuffle+agg whose input is GENERATED (spark.range —
@@ -339,14 +328,6 @@ def bench_stateful_stream(spark) -> tuple[int, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # must run BEFORE the JVM starts: Spark's python workers read
-    # PYTHONPATH from the JVM's environment, so a fallback installed
-    # after getOrCreate() is invisible to the v2 state transport
-    from in_stream_processing_course_spark.compat import (
-        ensure_protobuf_fallback,
-    )
-
-    ensure_protobuf_fallback()
     # shuffle partitions track DATA size, not core count: at sf0.1 a
     # 32-partition shuffle stage is dominated by task scheduling (the
     # per-partition payload is KBs), and cores stay busy anyway because

@@ -10,8 +10,9 @@ import os
 import sys
 import tempfile
 
-# transformWithStateInPandas (streaming/state_v2.py) speaks protobuf to
-# the JVM. Where google.protobuf isn't pip-installed, some hosts carry
+# transformWithStateInPandas (streaming/recent_items.py,
+# streaming/rolling_median.py) speaks protobuf to the JVM. Where
+# google.protobuf isn't pip-installed, some hosts carry
 # a pure-Python protobuf inside the (public) Google Cloud SDK's App
 # Engine bundle; expose JUST its google/protobuf subtree through a shim
 # dir (never the whole bundle — it carries appengine/auth/oauth2

@@ -113,22 +113,10 @@ def windowed_stats_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     event) and fans out only the PARTIALS (one row per (ip, bucket)).
     Identical output by construction when slide divides window — both
     forms have hash-matched ORACLE_STATS_SLIDING since r1/r2
-    (bot_stats_two_level is this exact plan). The naive single-level
-    form stays registered as ``bot_stats_sliding_naive`` so the shape
-    comparison remains demonstrable, the knn_ivf_auto twin pattern.
-    Measured at sf0.1: 2.77 s -> ~1.9 s (the two_level bench line).
+    (bot_stats_two_level is this exact plan). Measured at sf0.1:
+    2.77 s -> ~1.9 s (the two_level bench line).
     """
     return windowed_stats_two_level(spark, sf_dir)
-
-
-def windowed_stats_sliding_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1, naive single-level form (the pre-r14 registered plan): one
-    ``window()`` fan-out of every event into 15 sliding windows, then
-    the (ip, window) aggregate. Kept as the demonstration twin of the
-    two-level rollup now bound to ``bot_stats_sliding``."""
-    return _stats_projection(
-        ip_window_stats(log_records(spark, sf_dir), "10 minutes", "40 seconds")
-    )
 
 
 def windowed_stats_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

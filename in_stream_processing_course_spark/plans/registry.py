@@ -52,15 +52,6 @@ register(
 register(
     "bot_stats_two_level", bd.windowed_stats_two_level, bd.ORACLE_STATS_SLIDING
 )
-# r14: bot_stats_sliding is rebound to the two-level rollup (VERDICT
-# r13 #2 — the naive form fans every event x15 before the aggregate);
-# the naive single-level plan stays registered as the demonstration
-# twin, same oracle (knn_ivf_auto precedent)
-register(
-    "bot_stats_sliding_naive",
-    bd.windowed_stats_sliding_naive,
-    bd.ORACLE_STATS_SLIDING,
-)
 register("bot_classified_windows", bd.classified_stats, bd.ORACLE_CLASSIFIED)
 register("bot_classified_totals", bd.classified_totals, bd.ORACLE_TOTALS_CLASSIFIED)
 register(

@@ -14,8 +14,10 @@ deterministic, so state-carried and single-pass folds agree exactly.
 
 Scale: one shuffle per micro-batch on user_id; state is two scalars
 per key in the state store (RocksDB at 100 TB key spaces — proven for
-this API shape in tests/test_state_v2.py). No timeout: an engagement
-feature never expires; set one if the key space must be bounded.
+this API shape in
+tests/test_streaming.py::test_stateful_history_on_rocksdb_provider).
+No timeout: an engagement feature never expires; set one if the key
+space must be bounded.
 """
 
 from __future__ import annotations

@@ -69,11 +69,7 @@ def windowed_bot_stream(actions: DataFrame) -> DataFrame:
 
 def stateful_bot_stream(actions: DataFrame) -> DataFrame:
     """DStream-semantics path: trailing-history verdicts with idle
-    timeout (T3). Routes through the v1 ``applyInPandasWithState``
-    operator — the r10 controlled A/B (STATEFUL_AB_r10.md) measured
-    v1 faster than the ``transformWithStateInPandas`` twin at both
-    tested key cardinalities, so v1 is the default by measurement;
-    ``streaming.state_v2`` remains the forward-compatible surface."""
+    timeout (T3), through the ``applyInPandasWithState`` operator."""
     return keyed_history_verdicts(actions_to_log_records(actions))
 
 

@@ -1,6 +1,5 @@
 """Per-key rolling recent-items state on transformWithStateInPandas
-MapState — the v2 typed-state structure the history operator
-(ValueState, :mod:`.state_v2`) doesn't exercise.
+MapState.
 
 Semantics: for each key (ip), maintain the ``RECENT_N`` most recently
 seen categories (by event time, category tie-break) and emit them each
@@ -16,8 +15,8 @@ it). Hence the stream equals the batch rule "top-N categories by
 max(time) per key" at every drain point, regardless of micro-batch
 boundaries — pinned by test.
 
-Like :mod:`.state_v2`, this needs the RocksDB state store provider and
-a working google.protobuf in the workers
+Like every transformWithState operator, this needs the RocksDB state
+store provider and a working google.protobuf in the workers
 (:func:`..compat.ensure_protobuf_fallback`).
 """
 

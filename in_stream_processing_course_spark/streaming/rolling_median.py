@@ -1,7 +1,6 @@
 """Per-key rolling median of the last-N values on
-transformWithStateInPandas ListState — the third typed-state structure
-(:mod:`.state_v2` exercises ValueState, :mod:`.recent_items` MapState),
-and the robust-statistic twin of the recent-items feature: "median of
+transformWithStateInPandas ListState — the robust-statistic twin of
+the recent-items MapState feature (:mod:`.recent_items`): "median of
 the user's last N event values", the outlier-resistant engagement
 feature a mean would let one burst corrupt.
 
@@ -14,8 +13,8 @@ drain point. Hence the stream equals the batch rule "lower median of
 the N most recent values per key" at every micro-batch boundary,
 pinned by the stream/batch equivalence test.
 
-Like the other v2-state operators this needs the RocksDB provider and
-a worker-visible google.protobuf (:func:`..compat.ensure_protobuf_fallback`).
+Like every transformWithState operator this needs the RocksDB provider
+and a worker-visible google.protobuf (:func:`..compat.ensure_protobuf_fallback`).
 """
 
 from __future__ import annotations

@@ -197,8 +197,8 @@ def _update_fn(
         return
     state.update(tuple(merged))
     if event_time:
-        # event-time eviction (r11, mirroring state_v2's mode): evict
-        # when the WATERMARK passes last-seen + timeout. The timer base
+        # event-time eviction (r11): evict when the WATERMARK passes
+        # last-seen + timeout. The timer base
         # is the newest retained bucket — a floor of the true last-seen
         # instant at SLIDE_SEC grain (the state schema carries no finer
         # timestamp; the <=30s slack only delays eviction, never evicts
@@ -268,7 +268,7 @@ def prereduce_log_records(
     identical to the raw path (pinned by test).
 
     WHEN TO USE: strictly CLUSTER-conditional. The r10 controlled
-    sweep (tools/stateful_ab.py, STATEFUL_AB_r10.md) settled this:
+    sweep (STATEFUL_AB_r10.md) settled this:
     there is NO local-mode crossover at ANY multiplicity — the
     combiner still costs 11-15% wall at a measured x750 shuffle-row
     shrink (120k events over 10 keys), because a single-JVM shuffle
@@ -344,17 +344,13 @@ def keyed_history_verdicts(
     ≈ event time; event-time is the replay-safe form for backfills
     (wall clock racing event time would otherwise purge every key
     mid-replay, and any >10-minute stall purges state that is live in
-    event time). Same mode contract as the v2 twin
-    (state_v2.keyed_history_verdicts_v2), with one semantic asymmetry:
-    applyInPandasWithState does NOT drop late input — rows behind the
-    watermark still reach ``_update_fn_event_time`` and merge into the
-    history; the watermark only drives EVICTION timing (which is why
-    the timer clamps to watermark+1 for already-expired keys — Spark
-    rejects timers at or behind the watermark). Only the v2
-    transformWithState path drops rows <= the watermark before the
-    operator. Size ``watermark_delay`` to the deployment's real
-    out-of-orderness either way: here it bounds how long an idle key's
-    state survives; in v2 it additionally bounds which rows count.
+    event time). applyInPandasWithState does NOT drop late input: rows
+    behind the watermark still reach ``_update_fn_event_time`` and
+    merge into the history; the watermark only drives EVICTION timing
+    (which is why the timer clamps to watermark+1 for already-expired
+    keys — Spark rejects timers at or behind the watermark). Size
+    ``watermark_delay`` to the deployment's real out-of-orderness: it
+    bounds how long an idle key's state survives.
     """
     source = prereduce_log_records(log_records) if prereduce else log_records
     if event_time:

@@ -5,12 +5,12 @@ import pytest
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
-# transformWithStateInPandas (streaming/state_v2.py) needs a runtime
-# google.protobuf, which isn't pip-installed here; compat exposes the
-# pure-Python copy bundled with the host's Google Cloud SDK when the
-# real package is absent. Must run at conftest import time, before the
-# JVM starts, so Spark's Python workers inherit the PYTHONPATH. On
-# hosts with neither, tests/test_state_v2.py keeps its importorskip.
+# transformWithStateInPandas (streaming/recent_items.py,
+# streaming/rolling_median.py) needs a runtime google.protobuf; compat
+# exposes the pure-Python copy bundled with the Google Cloud SDK when
+# the real package is absent. Must run at conftest import time, before
+# the JVM starts, so Spark's Python workers inherit the PYTHONPATH. On
+# hosts with neither, those operators' tests keep their importorskip.
 from in_stream_processing_course_spark.compat import (  # noqa: E402
     ensure_protobuf_fallback,
 )
@@ -53,7 +53,7 @@ def drip_json_chunks(tmp_path, chunks) -> str:
 def rocksdb_spark(spark):
     """Session with the RocksDB state store provider (required by every
     transformWithStateInPandas operator); restores the prior provider on
-    teardown. Shared by all v2-state test files."""
+    teardown. Shared by the transformWithState test files."""
     key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."

@@ -101,6 +101,16 @@ def test_asof_join_single_shuffle(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_bot_stats_sliding_has_no_window_fan_out(spark, sf_dir):
+    """bot_stats_sliding is the two-level rollup: tumbling partials
+    first, then the partials fan out into the sliding windows. The
+    single-level ``window(ts, 10 min, 40 s)`` form plans an ``Expand``
+    that copies every event 15x ahead of the aggregate
+    (plans/r14/bot_stats_sliding_before.txt); the rollup plans none."""
+    plan = _physical(QUERIES["bot_stats_sliding"](spark, sf_dir))
+    assert "Expand" not in plan
+
+
 def test_q21_rewrite_is_equi_join_only(spark):
     """The double-NOT-EXISTS rewrite must plan as equi-joins (per-order
     aggregate joined back), never a nested-loop self-join."""

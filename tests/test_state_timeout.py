@@ -79,6 +79,21 @@ def test_state_accumulates_between_calls():
     assert (row["clicks"], row["views"], row["categories_count"]) == (1, 1, 2)
 
 
+def test_window_prune_drops_buckets_outside_trailing_window():
+    """Old buckets beyond the trailing window fall out of the merged
+    history: the corrected-intent prune (SURVEY §1.4.4)."""
+    state = FakeGroupState()
+    list(st_mod._update_fn(("k",), [_batch([(0, 0, 5, "a")])], state))
+    out = list(
+        st_mod._update_fn(
+            ("k",), [_batch([(st_mod.WINDOW_SEC + 100, 2, 1, "b")])], state
+        )
+    )
+    row = out[0].iloc[0]
+    # the t=0 bucket is outside (max_bucket - window]: only batch 2 counts
+    assert (row["clicks"], row["views"], row["categories_count"]) == (2, 1, 1)
+
+
 class FakeEventTimeGroupState(FakeGroupState):
     def __init__(self, value=None, has_timed_out=False, watermark_ms=0):
         super().__init__(value, has_timed_out)
@@ -95,7 +110,7 @@ class FakeEventTimeGroupState(FakeGroupState):
         return self.watermark_ms
 
 
-# --- event-time eviction mode (r11, mirroring state_v2's) --------------------
+# --- event-time eviction mode (r11) ------------------------------------------
 
 
 def test_event_time_mode_arms_watermark_timer_from_newest_bucket():

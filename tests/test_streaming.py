@@ -162,6 +162,49 @@ def test_stateful_history_accumulates_across_batches(spark, tmp_path):
     assert verdicts == [(False, "clear"), (True, "categories")]
 
 
+@pytest.mark.parametrize(
+    "event_time", [False, True], ids=["processing_time", "event_time"]
+)
+def test_stateful_history_survives_checkpoint_restart(
+    spark, tmp_path, event_time
+):
+    """T6/T8 for the keyed-history operator: drain file 1, stop, drop
+    file 2, restart on the same checkpoint. The restarted query must
+    process only the new file (one emission) and merge run-1 state
+    into it (8 categories -> bot), so the per-key history and its
+    timeout round-trip the state store across query restarts, not just
+    across micro-batches within one run."""
+    from in_stream_processing_course_spark.streaming.state import (
+        keyed_history_verdicts,
+    )
+
+    b1 = gen.category_hopper("ip1", 40, 4, base_time=0, interval=20)
+    b2 = [
+        gen.Action(a.time + 60, f"cat{int(a.category_id[3:]) + 4}", a.ip, a.action)
+        for a in gen.category_hopper("ip1", 40, 4, base_time=0, interval=20)
+    ]
+    in_dir = write_actions(tmp_path, "b1.json", b1)
+    ckpt = str(tmp_path / "ckpt_restart")
+
+    def drain():
+        rows: list[tuple] = []
+        lr = actions_to_log_records(read_action_stream(spark, in_dir))
+        run_stream_foreach_batch(
+            keyed_history_verdicts(lr, event_time=event_time),
+            lambda df, _bid: rows.extend(
+                (r["categories_count"], r["is_bot"], r["reason"])
+                for r in df.collect()
+            ),
+            "update",
+            checkpoint_dir=ckpt,
+        )
+        return rows
+
+    assert drain() == [(4, False, "clear")]
+    write_actions(tmp_path, "b2.json", b2)
+    assert drain() == [(8, True, "categories")]
+
+
 def test_stateful_prereduce_matches_raw_path(spark, tmp_path):
     """The map-side combiner (prereduce_log_records) must be invisible
     in results: identical verdict rows for the same multi-batch drip

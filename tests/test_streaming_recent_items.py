@@ -1,8 +1,7 @@
 """Rolling recent-items MapState operator (streaming/recent_items.py):
 stream/batch equivalence with pruned state, cross-batch displacement,
 and the prune-safety property (a pruned category re-enters only via a
-new occurrence). Gated like test_state_v2 on a working protobuf +
-RocksDB provider.
+new occurrence). Gated on a working protobuf + RocksDB provider.
 """
 
 from __future__ import annotations

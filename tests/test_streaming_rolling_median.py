@@ -1,7 +1,7 @@
 """Rolling last-N median ListState operator
 (streaming/rolling_median.py): stream/batch equivalence across
 micro-batch boundaries with displacement, and robustness of the
-median to a pruned outlier. Gated like the other v2-state tests on a
+median to a pruned outlier. Gated like the recent-items tests on a
 working protobuf + RocksDB provider.
 """
 

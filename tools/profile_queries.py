@@ -23,18 +23,9 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from in_stream_processing_course_spark.plans.registry import QUERIES
 from in_stream_processing_course_spark.session import get_spark
-
-HEADLINE = [
-    "bot_stats_sliding", "bot_stats_two_level", "bot_classified_totals",
-    "bot_verdicts", "sessionize_events", "hourly_event_counts",
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "tpch_q18_large_volume",
-    "window_running_revenue", "dedup_events_exact",
-    "dedup_minhash_candidates", "dedup_simhash_candidates",
-    "knn_brute_force", "text_metrics",
-]
 
 
 def main() -> None:
