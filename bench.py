@@ -150,103 +150,6 @@ def bench_windowed_stream(spark) -> tuple[int, float]:
     return n_rows, elapsed
 
 
-def _bot_heavy_drip(tmp_root: str) -> tuple[str, int]:
-    """Drip skewed toward bots (the reference's 172.20.* population:
-    one action per 2 s per bot): high per-partition (key, bucket)
-    multiplicity — the regime the prereduce combiner exists for."""
-    import os as _os
-
-    from in_stream_processing_course_spark.sources import generator as gen
-
-    in_dir = _os.path.join(tmp_root, "in")
-    n_files, duration = 8, 240
-    actions = gen.botgen_workload(
-        n_bots=400, n_users=100, user_freq=20, duration_sec=duration
-    )
-    slice_sec = max(1, duration // n_files)
-    buckets: list[list] = [[] for _ in range(n_files)]
-    for a in actions:
-        buckets[min(a.time // slice_sec, n_files - 1)].append(a)
-    for i, b in enumerate(buckets):
-        gen.write_json_lines(b, _os.path.join(in_dir, f"part-{i:04d}.json"))
-    return in_dir, len(actions)
-
-
-def bench_prereduce_ab(spark) -> dict[str, float | int]:
-    """A/B the map-side combiner claim (VERDICT r3 item 6): the same
-    bot-heavy drip through ``keyed_history_verdicts`` with
-    prereduce=False then prereduce=True. streaming/state.py documents
-    ~15x per-bot-key shrink on bot-heavy feeds but ~25% wall COST on
-    the uniform bench workload — this measures both sides of that
-    trade-off with the workload the combiner targets."""
-    import shutil
-    import tempfile
-
-    from in_stream_processing_course_spark.sources.stream import (
-        read_action_stream,
-    )
-    from in_stream_processing_course_spark.streaming.pipeline import (
-        actions_to_log_records,
-    )
-    from in_stream_processing_course_spark.streaming.runner import (
-        await_drained,
-    )
-    from in_stream_processing_course_spark.streaming.state import (
-        keyed_history_verdicts,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_prereduce_")
-    in_dir, n_rows = _bot_heavy_drip(root)
-    out: dict[str, float | int] = {"rows": n_rows}
-    # min-of-2 per variant, interleaved (raw, pre, pre, raw) so neither
-    # variant systematically gets the warmer JVM — single-shot runs of
-    # this drip swing well over the raw-vs-prereduce delta
-    walls: dict[str, float] = {}
-    for rep, (label, flag) in enumerate(
-        (("raw", False), ("prereduce", True), ("prereduce", True), ("raw", False))
-    ):
-        lr = actions_to_log_records(
-            read_action_stream(spark, in_dir, max_files_per_trigger=1)
-        )
-        verdicts = keyed_history_verdicts(lr, prereduce=flag)
-        start = time.perf_counter()
-        query = (
-            verdicts.writeStream.format("noop")
-            .outputMode("update")
-            .option(
-                "checkpointLocation", os.path.join(root, f"ckpt_{label}_{rep}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(query, timeout_sec=600)
-        elapsed = time.perf_counter() - start
-        walls[label] = min(walls.get(label, elapsed), elapsed)
-    for label, wall in walls.items():
-        out[f"{label}_wall_sec"] = round(wall, 3)
-        out[f"{label}_rows_per_sec"] = round(n_rows / wall)
-    # the scale-relevant half of the trade-off: how many rows the
-    # combiner keeps OFF the state-op shuffle + Arrow transfer. Local
-    # mode can't show the network win (its shuffle is in-memory), so
-    # wall above measures mostly the combiner's added Python stage;
-    # the shrink factor is what a 1000-executor cluster banks per
-    # micro-batch. Measured batch-side on the same files (one scan
-    # partition per file ~ one micro-batch).
-    from in_stream_processing_course_spark.streaming.state import (
-        prereduce_log_records,
-    )
-
-    from in_stream_processing_course_spark.schemas import ACTION_SCHEMA
-
-    batch_lr = actions_to_log_records(
-        spark.read.schema(ACTION_SCHEMA).json(in_dir)
-    )
-    combined = prereduce_log_records(batch_lr).count()
-    out["prereduce_shrink_factor"] = round(n_rows / max(combined, 1), 2)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
 def bench_calibration(spark) -> float:
     """Fixed-work host-speed probe (r13, VERDICT r12 next-round #3):
     a deterministic shuffle+agg whose input is GENERATED (spark.range —
@@ -438,7 +341,6 @@ def main() -> None:
     r6_timings = _time_family(R6_FAMILY)
     state_rows, state_sec = bench_stateful_stream(spark)
     win_rows, win_sec = bench_windowed_stream(spark)
-    prereduce_ab = bench_prereduce_ab(spark)
     calib_sec = bench_calibration(spark)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     metrics = {
@@ -479,7 +381,6 @@ def main() -> None:
                 "r6_queries": r6_timings,
                 "bpe_train_wall_sec": bpe_train_sec,
                 "bpe_vocab_prep_wall_sec": bpe_vocab_sec,
-                "prereduce_bot_heavy": prereduce_ab,
                 # fixed-work host-speed probe: divide headline walls by
                 # (calib_this_round / calib_other_round) before calling
                 # a cross-round delta a regression

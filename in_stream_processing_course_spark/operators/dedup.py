@@ -153,9 +153,7 @@ def minhash_candidates(
     # band rows (bands rows/doc) — the band explode above the
     # checkpoint is pure array slicing that re-runs per join side for
     # free, while the checkpointed blocks shrink by the band factor
-    # and, measured at sf0.1, the lazy checkpoint's physical-planning
-    # cost during DataFrame construction halves (same trick on the
-    # simhash twin: build 0.90 -> 0.42 s, total 2.51 -> 1.92 s).
+    # (same trick on the simhash twin).
     # Checkpointing before a banded self-join is the standard LSH
     # shape at any scale (MEMORY_AND_DISK blocks, spillable).
     sig = minhash_signatures(
@@ -453,9 +451,8 @@ def simhash_dedup_candidates(
     # r14: the checkpoint moved from the exploded band rows down to the
     # NARROW fingerprint table (1 row/doc vs n_bands rows/doc) — the
     # band explode above it is shift/mask column algebra that re-runs
-    # per join side for free, and the lazy checkpoint's construction-
-    # time physical planning halves (measured 0.90 -> 0.42 s build,
-    # 2.51 -> 1.92 s total at sf0.1, identical rows).
+    # per join side for free, while the checkpointed blocks shrink by
+    # the band factor (identical rows).
     sh = (
         simhash_table(df, id_col, text_col, n_bits)
         .withColumnRenamed("simhash", "_sh")

@@ -44,23 +44,12 @@ class KeyedUpsertSink:
         ttl_sec: int | None = None,
         if_not_exists: bool = False,
         now_fn: Callable[[], float] = time.time,
-        n_partitions: int | None = None,
     ) -> None:
         self.path = path
         self.key_cols = key_cols
         self.ttl_sec = ttl_sec
         self.if_not_exists = if_not_exists
         self.now_fn = now_fn
-        # When set, the table is laid out as n hash-of-key directory
-        # partitions (`kpart=<k>/`) and a micro-batch rewrites ONLY the
-        # partitions its keys hash into — per-trigger I/O becomes
-        # O(touched keys' partitions), not O(table). A key's partition
-        # is a pure function of the key, so merge semantics (upsert /
-        # ifNotExists) are unchanged: colliding keys always land in the
-        # same partition. TTL expiry stays a read-side filter for
-        # untouched partitions (their expired rows compact away the
-        # next time their partition is touched).
-        self.n_partitions = n_partitions
 
     # -- crash recovery -----------------------------------------------------
 
@@ -72,16 +61,14 @@ class KeyedUpsertSink:
         enough on disk to restore the last committed state:
 
         - ``._stage_*`` dirs are uncommitted batch output → delete.
-        - ``._old_table_*`` (whole-table swap retired the live table but
-          died before installing the stage): if the live path is missing,
+        - ``._old_table_*`` (the swap retired the live table but died
+          before installing the stage): if the live path is missing,
           restore it; if present, the swap committed → delete the old.
-        - ``._old_kpart_<k>_*`` (partitioned swap retired partition k):
-          same rule against ``<path>/kpart=<k>``.
 
-        After recovery the table holds, per partition, either the state
-        before the crashed batch or its completed merge; the checkpoint
-        retry then re-runs the MERGE idempotently over both. No
-        pre-existing key is ever dropped.
+        After recovery the table holds either the state before the
+        crashed batch or its completed merge; the checkpoint retry then
+        re-runs the MERGE idempotently over both. No pre-existing key is
+        ever dropped.
         """
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         base = os.path.basename(self.path)
@@ -96,82 +83,6 @@ class KeyedUpsertSink:
                     shutil.rmtree(full, ignore_errors=True)
                 else:
                     shutil.move(full, self.path)
-            elif name.startswith(f"{base}._old_kpart_"):
-                k = name[len(f"{base}._old_kpart_") :].split("_")[0]
-                dst = os.path.join(self.path, f"kpart={int(k)}")
-                if os.path.exists(dst):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    os.makedirs(self.path, exist_ok=True)
-                    shutil.move(full, dst)
-
-    # -- layout guard -------------------------------------------------------
-
-    def _marker_path(self) -> str:
-        return os.path.join(self.path, "_kpart_layout")
-
-    def _validate_layout(self) -> None:
-        """Fail loudly when the on-disk layout contradicts this sink's
-        configuration, instead of a confusing missing-``kpart``
-        AnalysisException (unpartitioned table + partitioned sink) or a
-        silent re-hash that strands stale duplicate keys in untouched
-        partitions (``n_partitions`` changed between runs)."""
-        if not os.path.isdir(self.path):
-            return
-        entries = [
-            n for n in os.listdir(self.path) if not n.startswith(("_", "."))
-        ]
-        kparts = [n for n in entries if n.startswith("kpart=")]
-        marker = self._marker_path()
-        persisted = None
-        if os.path.exists(marker):
-            with open(marker) as f:
-                persisted = int(f.read().strip())
-        if self.n_partitions is None:
-            if kparts or persisted is not None:
-                raise ValueError(
-                    f"table at {self.path} is hash-partitioned "
-                    f"(n_partitions={persisted}); construct the sink with "
-                    "the same n_partitions, or rewrite the table into an "
-                    "unpartitioned layout at a new path"
-                )
-            return
-        if entries and not kparts:
-            raise ValueError(
-                f"table at {self.path} is unpartitioned but the sink was "
-                f"configured with n_partitions={self.n_partitions}; migrate "
-                "by reading the table and writing it through a partitioned "
-                "sink at a new path"
-            )
-        if persisted is not None and persisted != self.n_partitions:
-            raise ValueError(
-                f"table at {self.path} was written with "
-                f"n_partitions={persisted} but the sink is configured with "
-                f"n_partitions={self.n_partitions}; changing the partition "
-                "count re-hashes keys and would strand stale duplicates in "
-                "untouched partitions — keep the persisted count or rewrite "
-                "the table at a new path"
-            )
-        if persisted is None and kparts:
-            # pre-marker table: the historical count CANNOT be inferred
-            # from the directory names (a sparse 6-partition table may
-            # show only kpart={0,3}, which also "fits" n_partitions=4 —
-            # adopting would lock in a wrong count and strand stale
-            # duplicate keys), so refuse and ask for an explicit marker
-            raise ValueError(
-                f"table at {self.path} has a kpart layout but no "
-                "_kpart_layout marker (written by a pre-marker version); "
-                "after confirming the partition count it was originally "
-                f"written with, create {self._marker_path()} containing "
-                "that integer"
-            )
-
-    def _write_marker(self) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"{self._marker_path()}.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(str(self.n_partitions))
-        os.replace(tmp, self._marker_path())
 
     # -- helpers ------------------------------------------------------------
 
@@ -198,8 +109,8 @@ class KeyedUpsertSink:
         return df.where(F.col("detected_at") >= F.lit(cutoff))
 
     def _merge(self, current: DataFrame | None, incoming: DataFrame) -> DataFrame:
-        """MERGE semantics shared by both layouts: last-writer-wins
-        upsert, or insert-only-when-absent under ``if_not_exists``."""
+        """MERGE semantics: last-writer-wins upsert, or
+        insert-only-when-absent under ``if_not_exists``."""
         if current is None:
             return incoming
         current = self._apply_ttl(current)
@@ -218,14 +129,10 @@ class KeyedUpsertSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         self._recover()
-        self._validate_layout()
         now = self.now_fn()
         incoming = batch_df.dropDuplicates(self.key_cols).withColumn(
             "detected_at", F.lit(float(now))
         )
-        if self.n_partitions is not None:
-            self._partitioned_rewrite(spark, incoming, batch_id)
-            return
         current = self._read_current(spark)
         merged = self._merge(current, incoming)
         # Stage the merged table to a sibling temp dir DISTRIBUTED (the
@@ -254,128 +161,32 @@ class KeyedUpsertSink:
         else:
             shutil.move(stage, self.path)
 
-    def _partitioned_rewrite(
-        self, spark: SparkSession, incoming: DataFrame, batch_id: int
-    ) -> None:
-        """Rewrite only the hash partitions the batch touches.
-
-        The batch's distinct partition ids are at most ``n_partitions``
-        integers (driver-side collect is bounded by the layout, not the
-        data); current rows load with a partition filter on ``kpart`` —
-        directory pruning, untouched partition files are never opened —
-        and the merged result stages to a temp dir partitioned the same
-        way before the touched ``kpart=<k>`` directories are swapped in.
-        Untouched partitions stay byte-identical (pinned by test).
-
-        The swap is two-phase: phase A renames every touched live
-        partition aside (``._old_kpart_<k>_*`` — renamed, never deleted
-        while it is the only copy), phase B installs the staged
-        partitions, phase C deletes the retired copies. A crash in any
-        window is repaired by :meth:`_recover` on the next batch — each
-        partition is restored to either its pre-batch state or the
-        completed merge, and the checkpoint retry re-runs the MERGE
-        idempotently over both. No pre-existing key is ever dropped
-        (pinned by a swap-window fault test)."""
-        kp = F.pmod(F.xxhash64(*self.key_cols), F.lit(self.n_partitions)).cast(
-            "int"
-        )
-        incoming = incoming.withColumn("kpart", kp)
-        touched = sorted(
-            r[0] for r in incoming.select("kpart").distinct().collect()
-        )
-        if not touched:
-            return
-        current = self._read_current(spark)
-        if current is not None:
-            current = current.where(F.col("kpart").isin([int(k) for k in touched]))
-        merged = self._merge(current, incoming)
-        stage = f"{self.path}._stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-        merged.write.partitionBy("kpart").parquet(stage)
-        os.makedirs(self.path, exist_ok=True)
-        self._write_marker()
-        # phase A: retire every touched live partition (rename, keep)
-        retired: list[str] = []
-        for k in touched:
-            dst = os.path.join(self.path, f"kpart={int(k)}")
-            if os.path.exists(dst):
-                old = f"{self.path}._old_kpart_{int(k)}_{uuid.uuid4().hex[:8]}"
-                shutil.move(dst, old)
-                retired.append(old)
-        # phase B: install the staged partitions. A partition the merge
-        # emitted nothing for (every row TTL-expired and the batch's
-        # keys all dropped by ifNotExists) simply stays retired — the
-        # retry recomputes the same empty result.
-        for k in touched:
-            src = os.path.join(stage, f"kpart={int(k)}")
-            if os.path.exists(src):
-                shutil.move(src, os.path.join(self.path, f"kpart={int(k)}"))
-        # phase C: drop the retired copies; the batch is now committed
-        for old in retired:
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    def read(self, spark: SparkSession, apply_ttl: bool = True) -> DataFrame:
-        """Query-side view of the table. NON-MUTATING by contract: a
-        reader may race an in-flight micro-batch of the same sink, and
-        repairing swap state from here would move directories out from
-        under the writer mid-swap (restoring a retired partition the
+    def read(self, spark: SparkSession) -> DataFrame:
+        """Query-side view of the table, TTL applied. NON-MUTATING by
+        contract: a reader may race an in-flight micro-batch of the same
+        sink, and repairing swap state from here would move directories
+        out from under the writer mid-swap (restoring a retired table the
         batch is about to replace, or deleting its live stage). Repair
         happens only in ``__call__`` (start of the next batch / the
         checkpoint retry, which is serialized with the swap). After a
-        crash, this read falls back READ-ONLY to the retired copies —
-        the last committed state — per partition or whole-table; a read
-        racing the swap window itself may transiently fail on a
-        just-moved directory and can simply be retried."""
-        self._validate_layout()
-        parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        base = os.path.basename(self.path)
-        names = sorted(os.listdir(parent)) if os.path.isdir(parent) else []
-        frames: list[DataFrame] = []
-        try:
-            live = self._read_current(spark)
-        except AnalysisException as exc:
-            # a crash that retires EVERY kpart partition leaves the
-            # table dir holding only the _kpart_layout marker, which
-            # reads as UNABLE_TO_INFER_SCHEMA rather than
-            # PATH_NOT_FOUND — for this READ-ONLY view that still
-            # means "no live data, serve the retired copies" (the
-            # writer's _recover will repair the layout; _read_current
-            # keeps propagating it so a WRITE never mistakes a corrupt
-            # table for an empty one)
-            get_cond = getattr(exc, "getCondition", None) or exc.getErrorClass
-            if (get_cond() or "") != "UNABLE_TO_INFER_SCHEMA":
-                raise
-            live = None
+        crash, this read falls back READ-ONLY to the retired copy — the
+        last committed state; a read racing the swap window itself may
+        transiently fail on a just-moved directory and can simply be
+        retried."""
+        live = self._read_current(spark)
         if live is None:
-            # whole-table swap crashed between retire and install: the
-            # retired copy is the last committed state
+            # the swap crashed between retire and install: the retired
+            # copy is the last committed state
+            parent = os.path.dirname(os.path.abspath(self.path)) or "."
+            base = os.path.basename(self.path)
+            names = sorted(os.listdir(parent)) if os.path.isdir(parent) else []
             for name in names:
                 if name.startswith(f"{base}._old_table_"):
                     live = spark.read.parquet(os.path.join(parent, name))
                     break
-        if live is not None:
-            if "kpart" in live.columns:
-                live = live.drop("kpart")
-            frames.append(live)
-        # partitioned swap crashed mid-window: any retired partition
-        # whose live kpart=<k> is missing is still the committed state
-        # for that partition (files inside carry no kpart column, so
-        # the schema matches the kpart-dropped live frame)
-        for name in names:
-            if name.startswith(f"{base}._old_kpart_"):
-                k = name[len(f"{base}._old_kpart_") :].split("_")[0]
-                if not os.path.exists(
-                    os.path.join(self.path, f"kpart={int(k)}")
-                ):
-                    frames.append(
-                        spark.read.parquet(os.path.join(parent, name))
-                    )
-        if not frames:
+        if live is None:
             return spark.createDataFrame([], "struct<>")
-        df = frames[0]
-        for extra in frames[1:]:
-            df = df.unionByName(extra)
-        return self._apply_ttl(df) if apply_ttl else df
+        return self._apply_ttl(live)
 
 
 def console_sink(df: DataFrame, **options):

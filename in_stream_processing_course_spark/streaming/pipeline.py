@@ -82,7 +82,6 @@ def start_bot_detection(
     if_not_exists: bool = True,
     trigger_seconds: str | None = None,
     available_now: bool = False,
-    sink_partitions: int | None = None,
 ):
     """Wire a streaming action source to the keyed verdict sink
     (K1/K2 semantics: key = bot_ip, ifNotExists, 10-min TTL;
@@ -90,20 +89,12 @@ def start_bot_detection(
     """
     if mode == "structured":
         verdicts = windowed_bot_stream(actions)
-        keys = ["bot_ip"]
     else:
         verdicts = filter_bots(stateful_bot_stream(actions)).select(
             F.col("ip").alias("bot_ip"), "reason"
         )
-        keys = ["bot_ip"]
     sink = KeyedUpsertSink(
-        sink_path,
-        keys,
-        ttl_sec=ttl_sec,
-        if_not_exists=if_not_exists,
-        # bound per-trigger I/O to touched hash partitions when the
-        # verdict key space is large (sinks/upsert.py)
-        n_partitions=sink_partitions,
+        sink_path, ["bot_ip"], ttl_sec=ttl_sec, if_not_exists=if_not_exists
     )
     writer = (
         verdicts.writeStream.foreachBatch(sink)

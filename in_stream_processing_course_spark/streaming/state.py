@@ -113,29 +113,15 @@ def merge_history(
         # raises) and a pandas-2 [us] block would silently be 1000x off.
         epoch = batch["time"].to_numpy(dtype="datetime64[ns]").view("int64") // 10**9
         buckets = (epoch // slide_sec) * slide_sec
-        if "categories_json" in batch.columns:
-            # pre-reduced partial rows (see prereduce_log_records): each
-            # carries a category SET for its bucket, not a single value
-            for b, c, v, cats in zip(
-                buckets,
-                batch["clicks"].to_numpy(),
-                batch["views"].to_numpy(),
-                batch["categories_json"].to_numpy(),
-            ):
-                slot = hist.setdefault(int(b), [0, 0, set()])
-                slot[0] += int(c)
-                slot[1] += int(v)
-                slot[2].update(json.loads(cats))
-        else:
-            for b, c, v, cat in zip(
-                buckets, batch["clicks"].to_numpy(), batch["views"].to_numpy(),
-                batch["category"].to_numpy(),
-            ):
-                slot = hist.setdefault(int(b), [0, 0, set()])
-                slot[0] += int(c)
-                slot[1] += int(v)
-                if cat is not None:
-                    slot[2].add(str(cat))
+        for b, c, v, cat in zip(
+            buckets, batch["clicks"].to_numpy(), batch["views"].to_numpy(),
+            batch["category"].to_numpy(),
+        ):
+            slot = hist.setdefault(int(b), [0, 0, set()])
+            slot[0] += int(c)
+            slot[1] += int(v)
+            if cat is not None:
+                slot[2].add(str(cat))
     if hist:
         horizon = max(hist) - (window_sec - slide_sec)
         hist = {b: s for b, s in hist.items() if b >= horizon}
@@ -242,88 +228,8 @@ def _update_fn_event_time(
     return _update_fn(key, pdf_iter, state, event_time=True)
 
 
-PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("ip", T.StringType()),
-        T.StructField("time", T.TimestampType()),
-        T.StructField("clicks", T.LongType()),
-        T.StructField("views", T.LongType()),
-        T.StructField("categories_json", T.StringType()),
-    ]
-)
-
-
-def prereduce_log_records(
-    log_records: DataFrame, slide_sec: int = SLIDE_SEC
-) -> DataFrame:
-    """Partition-local pre-aggregation ahead of the stateful operator.
-
-    A streaming groupBy before ``applyInPandasWithState`` is illegal
-    (two stateful operators), but a STATELESS ``mapInPandas`` that
-    combines rows per (ip, bucket) within each scan partition is not —
-    it is the map-side combiner the state path otherwise lacks. The
-    state operator's shuffle and Arrow transfer then move one partial
-    per (key, bucket, partition) instead of one row per event.
-    ``merge_history`` merges partials associatively, so results are
-    identical to the raw path (pinned by test).
-
-    WHEN TO USE: strictly CLUSTER-conditional. The r10 controlled
-    sweep (STATEFUL_AB_r10.md) settled this:
-    there is NO local-mode crossover at ANY multiplicity — the
-    combiner still costs 11-15% wall at a measured x750 shuffle-row
-    shrink (120k events over 10 keys), because a single-JVM shuffle
-    is an in-memory copy and the state operator's per-batch cost is
-    dominated by fixed state-store commit overhead, not input rows.
-    Enable it only where the shuffle crosses a real network and
-    per-row serialization + state-store I/O scale with row count; the
-    shrink factor (bench.py's ``prereduce_shrink_factor``, up to x750
-    measured) is the number that transfers to that deployment, the
-    local wall numbers are the cost floor. ``keyed_history_verdicts``
-    defaults to the raw path everywhere.
-    """
-
-    def combine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            # same zero-copy ns->s view as merge_history (r13, §4.4)
-            epoch = pdf["time"].to_numpy(dtype="datetime64[ns]").view("int64") // 10**9
-            bucket = (epoch // slide_sec) * slide_sec
-            grouped = pd.DataFrame(
-                {
-                    "ip": pdf["ip"],
-                    "bucket": bucket,
-                    "clicks": pdf["clicks"],
-                    "views": pdf["views"],
-                    "category": pdf["category"],
-                }
-            ).groupby(["ip", "bucket"], sort=False)
-            g = grouped.agg(
-                clicks=("clicks", "sum"),
-                views=("views", "sum"),
-                categories_json=("category", "unique"),
-            ).reset_index()
-            # vectorized set->json on the already-unique arrays beats a
-            # python lambda per group by ~3x
-            g["categories_json"] = g["categories_json"].map(
-                lambda u: json.dumps(sorted(str(c) for c in u if c is not None))
-            )
-            yield pd.DataFrame(
-                {
-                    "ip": g["ip"],
-                    "time": pd.to_datetime(g["bucket"], unit="s"),
-                    "clicks": g["clicks"].astype("int64"),
-                    "views": g["views"].astype("int64"),
-                    "categories_json": g["categories_json"],
-                }
-            )
-
-    return log_records.mapInPandas(combine, PARTIAL_SCHEMA)
-
-
 def keyed_history_verdicts(
     log_records: DataFrame,
-    prereduce: bool = False,
     event_time: bool = False,
     watermark_delay: str = "10 seconds",
 ) -> DataFrame:
@@ -332,10 +238,7 @@ def keyed_history_verdicts(
 
     Input: LogRecord-shaped streaming DataFrame
     (ip, time, clicks, views, category). Output: one verdict row per
-    active key per micro-batch (update semantics). ``prereduce=True``
-    inserts the stateless map-side combiner (see
-    :func:`prereduce_log_records` for when that pays); results are
-    identical either way.
+    active key per micro-batch (update semantics).
 
     ``event_time=True`` (r11) switches idle-key eviction from the wall
     clock to the watermark — evict when it passes the key's newest
@@ -352,10 +255,9 @@ def keyed_history_verdicts(
     ``watermark_delay`` to the deployment's real out-of-orderness: it
     bounds how long an idle key's state survives.
     """
-    source = prereduce_log_records(log_records) if prereduce else log_records
     if event_time:
         return (
-            source.withWatermark("time", watermark_delay)
+            log_records.withWatermark("time", watermark_delay)
             .groupBy("ip")
             .applyInPandasWithState(
                 _update_fn_event_time,
@@ -365,7 +267,7 @@ def keyed_history_verdicts(
                 timeoutConf=GroupStateTimeout.EventTimeTimeout,
             )
         )
-    return source.groupBy("ip").applyInPandasWithState(
+    return log_records.groupBy("ip").applyInPandasWithState(
         _update_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

@@ -58,3 +58,46 @@ def test_fan_out_by_honors_caller_probe(spark):
         assert out.rdd.getNumPartitions() == par
     # a claimed already-wide input must be left alone (no new exchange)
     assert b.fan_out_by(base, "user_id", n_partitions=par) is base
+
+
+def test_fan_out_by_hint_matches_probed_partitions(spark, monkeypatch):
+    """Every plan builder that passes ``n_partitions`` to fan_out_by
+    claims its input's partition count without probing it. Build every
+    registered query with a spy on each importing module's fan_out_by
+    and check each claim against ``df.rdd.getNumPartitions()``; a wrong
+    hint would silently skip (or force) the fan-out exchange."""
+    import importlib
+
+    from in_stream_processing_course_spark.plans.registry import QUERIES
+
+    modules = [
+        "bot_detection",
+        "retrieval_queries",
+        "relational",
+        "dedup_queries",
+        "events_queries",
+        "incremental_queries",
+    ]
+    calls: dict[str, int] = {m: 0 for m in modules}
+    wrong: list[tuple[str, tuple[str, ...], int, int]] = []
+
+    def spy_for(mod_name, orig):
+        def spy(df, *cols, n_partitions=None):
+            calls[mod_name] += 1
+            if n_partitions is not None:
+                probed = df.rdd.getNumPartitions()
+                if n_partitions != probed:
+                    wrong.append((mod_name, cols, n_partitions, probed))
+            return orig(df, *cols, n_partitions=n_partitions)
+
+        return spy
+
+    for name in modules:
+        mod = importlib.import_module(
+            f"in_stream_processing_course_spark.plans.{name}"
+        )
+        monkeypatch.setattr(mod, "fan_out_by", spy_for(name, mod.fan_out_by))
+    for name in sorted(QUERIES):
+        QUERIES[name](spark, SF)
+    assert not wrong, wrong
+    assert all(calls.values()), calls

@@ -121,38 +121,6 @@ def test_space_saving_guarantees_hold(batches, capacity):
             assert item in s
 
 
-@given(rows=st.lists(row, min_size=1, max_size=40))
-@settings(max_examples=150, deadline=None)
-def test_merge_history_partials_equal_raw(rows):
-    """The prereduce soundness property: merging pre-combined
-    (bucket, clicks, views, category-set) PARTIAL rows produces exactly
-    the state merging the raw rows produces — any partition-local
-    combining ahead of the state operator is invisible in results."""
-    import json as _json
-
-    from in_stream_processing_course_spark.streaming.state import SLIDE_SEC
-
-    raw = merge_history(None, _batch(rows))
-    per_bucket: dict = {}
-    for t, c, v, cat in rows:
-        b = (t // SLIDE_SEC) * SLIDE_SEC
-        slot = per_bucket.setdefault(b, [0, 0, set()])
-        slot[0] += c
-        slot[1] += v
-        slot[2].add(cat)
-    partial = pd.DataFrame(
-        {
-            "time": pd.to_datetime(sorted(per_bucket), unit="s"),
-            "clicks": [per_bucket[b][0] for b in sorted(per_bucket)],
-            "views": [per_bucket[b][1] for b in sorted(per_bucket)],
-            "categories_json": [
-                _json.dumps(sorted(per_bucket[b][2])) for b in sorted(per_bucket)
-            ],
-        }
-    )
-    assert merge_history(None, partial) == raw
-
-
 # --- streaming attribution: batching invariance + brute-force parity -------
 
 
