@@ -4,18 +4,19 @@ cache, or any foreachBatch append) accretes one-file-per-trigger; at
 40-second triggers that is ~2,000 files/day/partition, and at 100 TB
 the NameNode listing + per-file open cost dominates scans long before
 the bytes do. Compaction rewrites a directory into size-targeted
-files with the same rename-swap discipline as
-``streaming.pipeline.expire_raw_events`` (temp write -> two renames;
-a table format would make this a metadata-only commit).
+files through :func:`rewrite_parquet_dir`, the one guarded,
+crash-recoverable rewrite of a maintained table (a table format would
+make it a metadata-only commit).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from .upsert import recover_table, replace_table
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # parquet sweet spot at scale
 
@@ -28,6 +29,28 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def rewrite_parquet_dir(
+    spark: SparkSession,
+    path: str,
+    transform: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Replace the parquet table at ``path`` with ``transform`` of its
+    rows. Refuses while an active streaming query writes to ``path``
+    (best-effort, via the queries' sink descriptions); repairs a swap
+    an earlier run crashed in (:func:`recover_table`); rewrites
+    distributed and swaps with :func:`replace_table`. The result is a
+    plain parquet directory without a sink's ``_spark_metadata`` log."""
+    for q in spark.streams.active:
+        desc = (q.lastProgress or {}).get("sink", {}).get("description", "")
+        if path in desc:
+            raise RuntimeError(
+                f"rewrite_parquet_dir: streaming query {q.name or q.id} is "
+                f"actively writing to {path}; stop it before rewriting"
+            )
+    recover_table(path)
+    replace_table(transform(spark.read.parquet(path)), path)
+
+
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
@@ -38,33 +61,19 @@ def compact_parquet_dir(
     range-clustered on ``sort_by`` so footer min/max stats prune after
     compaction. Returns the new file count.
 
-    Same safety contract as ``expire_raw_events``: refuses while a
-    streaming query is writing to the directory, rewrites
-    distributed (never collects), and swaps via renames. Sizing uses
-    the CURRENT on-disk bytes — compressed parquet in, compressed
-    parquet out, so the estimate is self-calibrating.
+    Sizing uses the CURRENT on-disk bytes — compressed parquet in,
+    compressed parquet out, so the estimate is self-calibrating.
     """
-    for q in spark.streams.active:
-        desc = (q.lastProgress or {}).get("sink", {}).get("description", "")
-        if path in desc:
-            raise RuntimeError(
-                f"compact_parquet_dir: streaming query {q.name or q.id} is "
-                f"actively writing to {path}; stop it before compacting"
+
+    def cluster(df: DataFrame) -> DataFrame:
+        n_files = max(1, -(-_dir_bytes(path) // target_file_bytes))
+        if sort_by:
+            return df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(
+                *sort_by
             )
-    n_files = max(1, -(-_dir_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path)
-    if sort_by:
-        df = df.repartitionByRange(n_files, *sort_by).sortWithinPartitions(
-            *sort_by
-        )
-    else:
-        df = df.coalesce(n_files)
-    tmp = f"{path}._compact_{uuid.uuid4().hex[:8]}"
-    df.write.parquet(tmp)
-    old = f"{path}._old_{uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+        return df.coalesce(n_files)
+
+    rewrite_parquet_dir(spark, path, cluster)
     return sum(
         1 for f in os.listdir(path) if f.endswith(".parquet")
     )

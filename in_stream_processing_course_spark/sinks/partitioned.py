@@ -60,18 +60,14 @@ def backfill_partitions(
     truncate the WHOLE table (the classic backfill foot-gun); dynamic
     replaces exactly the partitions the incoming frame writes.
 
-    The session conf is set per-write and restored — callers' global
-    overwrite semantics are not silently changed.
+    The mode is a per-write option, so the session's overwrite
+    semantics are never touched.
     """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            corrected.repartition("event_date")
-            .sortWithinPartitions("user_id", "ts")
-            .write.partitionBy("event_date")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        corrected.repartition("event_date")
+        .sortWithinPartitions("user_id", "ts")
+        .write.partitionBy("event_date")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out_dir)
+    )

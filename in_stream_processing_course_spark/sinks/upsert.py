@@ -34,6 +34,62 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def recover_table(path: str) -> None:
+    """Repair what a crashed :func:`replace_table` left at ``path``.
+    The swap only *renames* live data, so every crash window leaves the
+    last committed state on disk: ``._stage_*`` dirs are uncommitted
+    output → delete; a ``._old_table_*`` dir is the retired table →
+    restore it if the live path is missing, else (the swap committed)
+    delete it. Re-running the rewrite afterwards (a sink batch's
+    checkpoint retry, a maintenance job's next run) drops no row."""
+    parent = os.path.dirname(os.path.abspath(path)) or "."
+    base = os.path.basename(path)
+    if not os.path.isdir(parent):
+        return
+    for name in sorted(os.listdir(parent)):
+        full = os.path.join(parent, name)
+        if name.startswith(f"{base}._stage_"):
+            shutil.rmtree(full, ignore_errors=True)
+        elif name.startswith(f"{base}._old_table_"):
+            if os.path.exists(path):
+                shutil.rmtree(full, ignore_errors=True)
+            else:
+                shutil.move(full, path)
+
+
+def replace_table(df: DataFrame, path: str) -> None:
+    """Make ``df`` the table at ``path``: write a sibling stage
+    DISTRIBUTED (nothing funnels through the driver), retire the live
+    table by rename (never delete it first), install the stage. A crash
+    anywhere leaves the live table or a retired copy for
+    :func:`recover_table`; readers see the old table or the new one. On
+    a real cluster this is a Delta/Iceberg metadata-only commit."""
+    stage = f"{path}._stage_{uuid.uuid4().hex[:8]}"
+    df.write.parquet(stage)
+    if os.path.exists(path):
+        old = f"{path}._old_table_{uuid.uuid4().hex[:8]}"
+        shutil.move(path, old)
+        shutil.move(stage, path)
+        shutil.rmtree(old)
+    else:
+        shutil.move(stage, path)
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when it doesn't exist yet.
+    Only PATH_NOT_FOUND means "no table": any other failure (corrupt
+    footer, FS hiccup) propagates, so a micro-batch fails and is retried
+    from the checkpoint instead of overwriting the table with just the
+    incoming batch."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        get_cond = getattr(exc, "getCondition", None) or exc.getErrorClass
+        if (get_cond() or "") == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 class KeyedUpsertSink:
     """foreachBatch target maintaining a keyed parquet table."""
 
@@ -51,56 +107,7 @@ class KeyedUpsertSink:
         self.if_not_exists = if_not_exists
         self.now_fn = now_fn
 
-    # -- crash recovery -----------------------------------------------------
-
-    def _recover(self) -> None:
-        """Repair any state a crashed batch left behind, before doing work.
-
-        The swap protocol only ever *renames* live data (never deletes it
-        before the replacement is installed), so every crash window leaves
-        enough on disk to restore the last committed state:
-
-        - ``._stage_*`` dirs are uncommitted batch output → delete.
-        - ``._old_table_*`` (the swap retired the live table but died
-          before installing the stage): if the live path is missing,
-          restore it; if present, the swap committed → delete the old.
-
-        After recovery the table holds either the state before the
-        crashed batch or its completed merge; the checkpoint retry then
-        re-runs the MERGE idempotently over both. No pre-existing key is
-        ever dropped.
-        """
-        parent = os.path.dirname(os.path.abspath(self.path)) or "."
-        base = os.path.basename(self.path)
-        if not os.path.isdir(parent):
-            return
-        for name in sorted(os.listdir(parent)):
-            full = os.path.join(parent, name)
-            if name.startswith(f"{base}._stage_"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith(f"{base}._old_table_"):
-                if os.path.exists(self.path):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    shutil.move(full, self.path)
-
     # -- helpers ------------------------------------------------------------
-
-    def _read_current(self, spark: SparkSession) -> DataFrame | None:
-        """Current table, or None only when the table doesn't exist yet.
-
-        Only the path-not-found AnalysisException maps to "empty table";
-        any other failure (corrupt footer, FS hiccup) must propagate so
-        the micro-batch fails and is retried from the checkpoint instead
-        of silently overwriting the table with just the incoming batch.
-        """
-        try:
-            return spark.read.parquet(self.path)
-        except AnalysisException as exc:
-            get_cond = getattr(exc, "getCondition", None) or exc.getErrorClass
-            if (get_cond() or "") == "PATH_NOT_FOUND":
-                return None
-            raise
 
     def _apply_ttl(self, df: DataFrame) -> DataFrame:
         if self.ttl_sec is None:
@@ -128,38 +135,16 @@ class KeyedUpsertSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        self._recover()
+        recover_table(self.path)
         now = self.now_fn()
         incoming = batch_df.dropDuplicates(self.key_cols).withColumn(
             "detected_at", F.lit(float(now))
         )
-        current = self._read_current(spark)
-        merged = self._merge(current, incoming)
-        # Stage the merged table to a sibling temp dir DISTRIBUTED (the
-        # executors write parquet in parallel straight from the join
-        # plan — nothing ever funnels through the driver), then
-        # rename-swap it over the live path. Same discipline as
-        # sinks/compaction.py and streaming.pipeline.expire_raw_events:
-        # readers either see the old complete table or the new one, and
-        # a failed batch leaves the live table untouched so checkpoint
-        # retry re-runs the MERGE idempotently. On a real cluster this
-        # body is a Delta/Iceberg MERGE INTO (metadata-only commit);
-        # with millions of flagged keys this path scales with executor
-        # count, not driver heap.
-        stage = f"{self.path}._stage_{batch_id}_{uuid.uuid4().hex[:8]}"
-        merged.write.parquet(stage)
-        if os.path.exists(self.path):
-            # retire-then-install: the live table is renamed (never
-            # deleted) before the stage is installed, so a crash in the
-            # window leaves either the live table or a restorable
-            # ._old_table_* — _recover() on the next batch puts the last
-            # committed state back before the checkpoint retry re-merges.
-            old = f"{self.path}._old_table_{uuid.uuid4().hex[:8]}"
-            shutil.move(self.path, old)
-            shutil.move(stage, self.path)
-            shutil.rmtree(old)
-        else:
-            shutil.move(stage, self.path)
+        # the merged table is written distributed and swapped in by
+        # replace_table; a failed batch leaves the last committed table
+        # (or its retired copy) for the checkpoint retry to re-merge
+        merged = self._merge(read_table(spark, self.path), incoming)
+        replace_table(merged, self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Query-side view of the table, TTL applied. NON-MUTATING by
@@ -173,7 +158,7 @@ class KeyedUpsertSink:
         last committed state; a read racing the swap window itself may
         transiently fail on a just-moved directory and can simply be
         retried."""
-        live = self._read_current(spark)
+        live = read_table(spark, self.path)
         if live is None:
             # the swap crashed between retire and install: the retired
             # copy is the last committed state

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketches import cm_estimate, cm_sketch
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 DEFAULT_W = 1024
 
@@ -59,14 +60,7 @@ def cm_maintain(
     counters (pinned by the restart test)."""
     counts = cm_counter_stream(events, col, w=w)
     sink = KeyedUpsertSink(table_path, ["row", "bucket"])
-    writer = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(counts, sink, checkpoint_dir, "update", available_now)
 
 
 def cm_estimates_from_table(

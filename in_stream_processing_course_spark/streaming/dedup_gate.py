@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_bands
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 def _band_schema(id_col: str, id_type: str = "long") -> str:
     """Index read schema. ``id_type`` must mirror the incoming batch's
@@ -160,11 +161,4 @@ def screen_document_stream(
     available_now: bool = True,
 ):
     """Wire a document stream through the gate."""
-    writer = (
-        docs.writeStream.foreachBatch(gate)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs, gate, checkpoint_dir, "append", available_now)

@@ -35,6 +35,7 @@ from ..operators.sketches import (
     theta_sample,
 )
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 
 def theta_maintain(
@@ -59,14 +60,7 @@ def theta_maintain(
         # stream; an empty MERGE is harmless and creates the table
         sink(theta_sample(batch_df, col, lg_inv_p, group_cols), batch_id)
 
-    writer = (
-        events.writeStream.foreachBatch(feed)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(events, feed, checkpoint_dir, "append", available_now)
 
 
 def theta_estimates_from_table(

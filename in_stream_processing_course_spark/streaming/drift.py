@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.projections import ensure_timestamp
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 DEFAULT_WINDOW = "10 minutes"
 DEFAULT_WATERMARK = "2 minutes"
@@ -65,14 +66,7 @@ def drift_monitor(
     table is exactly-once."""
     counts = windowed_type_counts(events, window, watermark)
     sink = KeyedUpsertSink(table_path, ["window_start", "event_type"])
-    writer = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(counts, sink, checkpoint_dir, "update", available_now)
 
 
 def chi2_by_window(

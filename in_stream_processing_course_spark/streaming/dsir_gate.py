@@ -43,6 +43,7 @@ from ..plans.lm_queries import (
     bigrams_of,
 )
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 
 def save_dsir_models(
@@ -175,11 +176,4 @@ def gate_document_stream(
     available_now: bool = True,
 ):
     """Wire a document stream through the gate."""
-    writer = (
-        docs.writeStream.foreachBatch(gate)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(docs, gate, checkpoint_dir, "append", available_now)

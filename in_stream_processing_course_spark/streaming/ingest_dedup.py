@@ -24,11 +24,11 @@ maintenance schedule like any streaming sink output.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_bands, minhash_index_matches
+from ..sinks.upsert import read_table
 
 
 class IncrementalDedupIngest:
@@ -59,34 +59,17 @@ class IncrementalDedupIngest:
         # already bounded by the min() aggregation
         self.max_bucket_size = max_bucket_size
 
-    def _read_index(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.index_path)
-        except AnalysisException as exc:
-            get_cond = getattr(exc, "getCondition", None) or exc.getErrorClass
-            if (get_cond() or "") == "PATH_NOT_FOUND":
-                return None
-            raise
-
     @staticmethod
     def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
         """Idempotent per-batch write: replace exactly this batch's
         partition (dynamic overwrite), never the table."""
-        spark = df.sparkSession
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        finally:
-            if old is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.partitionBy("batch_id")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
 
     def _dedup_within_batch(
         self, batch: DataFrame
@@ -145,7 +128,7 @@ class IncrementalDedupIngest:
         spark = batch_df.sparkSession
         batch, new_bands = self._dedup_within_batch(batch_df)
         batch = batch.localCheckpoint()
-        index = self._read_index(spark)
+        index = read_table(spark, self.index_path)
         if index is not None:
             # replay safety: a retried micro-batch must not screen
             # against the bands its own failed attempt already wrote —
@@ -189,7 +172,7 @@ class IncrementalDedupIngest:
         return spark.read.parquet(self.quarantine_path)
 
     def index(self, spark: SparkSession) -> DataFrame:
-        df = self._read_index(spark)
+        df = read_table(spark, self.index_path)
         if df is None:
             raise FileNotFoundError(self.index_path)
         return df

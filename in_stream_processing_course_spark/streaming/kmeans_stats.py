@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.clustering import assign_to_centroids
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 _SCALE = 1e6  # micro-unit fixed point — matches the registered twins
 
@@ -79,14 +80,7 @@ def maintain_cluster_stats(
     totals)."""
     stats = cluster_stats_stream(vecs, centroids, vec_col=vec_col)
     sink = KeyedUpsertSink(table_path, ["cluster", "dim"])
-    writer = (
-        stats.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stats, sink, checkpoint_dir, "update", available_now)
 
 
 def centroids_from_table(

@@ -42,6 +42,7 @@ from ..operators.sketches import (
     dd_quantiles,
 )
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 
 def dd_counter_stream(
@@ -69,14 +70,7 @@ def dd_maintain(
     histogram (pinned by the restart test)."""
     counts = dd_counter_stream(events, col, gamma)
     sink = KeyedUpsertSink(table_path, ["bucket"])
-    writer = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(counts, sink, checkpoint_dir, "update", available_now)
 
 
 def _load_hist(spark: SparkSession, table_path: str) -> list[tuple[int, int]]:

@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 from ..functions.classifier import with_verdict
 from ..operators.aggregations import ip_window_stats
 from ..operators.projections import action_counters, filter_bots
+from ..sinks.compaction import rewrite_parquet_dir
 from ..sinks.upsert import KeyedUpsertSink
+from ..streaming.runner import start_foreach_batch
 from ..streaming.state import keyed_history_verdicts
 
 WATERMARK = "2 minutes"  # ImplStructured.scala:11
@@ -96,16 +98,9 @@ def start_bot_detection(
     sink = KeyedUpsertSink(
         sink_path, ["bot_ip"], ttl_sec=ttl_sec, if_not_exists=if_not_exists
     )
-    writer = (
-        verdicts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        verdicts, sink, checkpoint_dir, "update", available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=trigger_seconds)
-    return writer.start()
 
 
 def start_raw_event_cache(
@@ -146,42 +141,15 @@ def expire_raw_events(spark, path: str, retention_sec: int = 60) -> int:
     On a cluster this is a Delta/Iceberg ``DELETE WHERE`` + vacuum; on
     plain parquet files can only be compacted by rewrite, which is
     incompatible with a concurrently running FileStreamSink query on the
-    same directory. So this function:
-
-    - REFUSES to run while any active streaming query is writing to
-      ``path`` (best-effort detection via the active queries' sink
-      descriptions) — stop the cache query first;
-    - rewrites distributed (no driver collect — the cache is unbounded);
-    - stages the retained rows in a sibling temp directory and swaps it
-      in with two directory renames (the minimal non-atomic window on a
-      plain filesystem; a table format makes this a metadata-only
-      commit);
-    - drops the sink's ``_spark_metadata`` log: the compacted directory
-      is no longer the sink's exact file set, so keeping the log would
-      make metadata-aware reads resolve deleted files. After compaction
-      the directory reads via plain file listing; resume streaming into
-      it with a FRESH checkpoint + sink (or a new subdirectory), not the
-      old sink checkpoint.
+    same directory. The rewrite is ``sinks.compaction.rewrite_parquet_dir``:
+    it refuses while the cache query is writing to ``path``, recovers a
+    crashed earlier run, and leaves a plain parquet directory without
+    the sink's ``_spark_metadata`` log — resume streaming into it with a
+    FRESH checkpoint + sink (or a new subdirectory), not the old sink
+    checkpoint.
     """
-    import shutil
-    import uuid
-
-    for q in spark.streams.active:
-        progress = q.lastProgress
-        desc = (progress or {}).get("sink", {}).get("description", "")
-        if path in desc:
-            raise RuntimeError(
-                f"expire_raw_events: streaming query {q.name or q.id} is "
-                f"actively writing to {path}; stop it before compacting"
-            )
-    df = spark.read.parquet(path)
     cutoff = F.current_timestamp() - F.expr(f"INTERVAL {retention_sec} SECONDS")
-    kept = df.where(F.col("ingested_at") >= cutoff)
-    tmp = f"{path}._compact_{uuid.uuid4().hex[:8]}"
-    kept.write.parquet(tmp)
-    retained = spark.read.parquet(tmp).count()
-    old = f"{path}._expired_{uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    return retained
+    rewrite_parquet_dir(
+        spark, path, lambda df: df.where(F.col("ingested_at") >= cutoff)
+    )
+    return spark.read.parquet(path).count()

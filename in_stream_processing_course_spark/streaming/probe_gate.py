@@ -59,6 +59,7 @@ from ..plans.similarity_queries import (
     _probe_feats_col,
 )
 from ..sinks.upsert import KeyedUpsertSink
+from .runner import start_foreach_batch
 
 
 def save_probe_model(
@@ -219,14 +220,7 @@ def margin_hist_maintain(
     )
     counts = margin_hist(margins, "margin")
     sink = KeyedUpsertSink(table_path, ["bucket"])
-    writer = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(counts, sink, checkpoint_dir, "update", available_now)
 
 
 def margin_drift(
@@ -295,11 +289,4 @@ def gate_vector_stream(
     available_now: bool = True,
 ):
     """Wire an embedding stream through the gate."""
-    writer = (
-        emb.writeStream.foreachBatch(gate)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(emb, gate, checkpoint_dir, "append", available_now)

@@ -78,20 +78,35 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
+def start_foreach_batch(
+    sdf: DataFrame,
+    batch_fn,
+    checkpoint_dir: str,
+    output_mode: str,
+    available_now: bool,
+    trigger_seconds: str | None = None,
+) -> StreamingQuery:
+    """Start ``sdf`` into the checkpointed ``foreachBatch`` target
+    ``batch_fn``: drain the backlog and stop (``available_now``), or
+    run on a ``trigger_seconds`` processing-time trigger."""
+    writer = (
+        sdf.writeStream.foreachBatch(batch_fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=trigger_seconds)
+    return writer.start()
+
+
 def run_stream_foreach_batch(
     sdf: DataFrame,
     batch_fn,
     output_mode: str = "update",
     checkpoint_dir: str | None = None,
-    trigger: dict | None = None,
 ) -> None:
     """T5/T6/K1 — foreachBatch with checkpointing; drains and stops."""
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_")
-    writer = (
-        sdf.writeStream.foreachBatch(batch_fn)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    query = writer.start()
-    await_drained(query)
+    await_drained(start_foreach_batch(sdf, batch_fn, checkpoint, output_mode, True))

@@ -1,6 +1,7 @@
 """Small-file compaction (sinks/compaction.py): many-file directory
 collapses to size-targeted files, data intact, sort-clustering
-restores footer-stats pruning, and the active-stream guard refuses."""
+restores footer-stats pruning, the active-stream guard refuses, and a
+crash inside the directory swap recovers."""
 
 from __future__ import annotations
 
@@ -73,6 +74,55 @@ def test_compaction_refuses_while_stream_active(spark, tmp_path):
             compact_parquet_dir(spark, sink_dir)
     finally:
         q.stop()
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "expire"])
+def test_rewrite_swap_crash_recovers(spark, tmp_path, monkeypatch, rewrite):
+    """A crash inside the swap window -- after the live table is retired
+    but before the rewritten table is installed -- must not lose it.
+    Inject the fault at the install, then re-run the rewrite: recovery
+    restores the retired table, the rewrite completes with every row,
+    and no swap directory is left behind."""
+    import os
+    import shutil
+
+    from in_stream_processing_course_spark.streaming.pipeline import (
+        expire_raw_events,
+    )
+
+    path = str(tmp_path / "table")
+    n = 200
+    spark.range(n).withColumn("ingested_at", F.current_timestamp()).repartition(
+        8
+    ).write.parquet(path)
+    run = {
+        "compact": lambda: compact_parquet_dir(spark, path),
+        "expire": lambda: expire_raw_events(spark, path, 3600),
+    }[rewrite]
+
+    orig_move = shutil.move
+
+    def crash_on_install(src, dst, *a, **kw):
+        if str(dst) == path:
+            raise OSError("injected crash during install")
+        return orig_move(src, dst, *a, **kw)
+
+    monkeypatch.setattr(shutil, "move", crash_on_install)
+    with pytest.raises(OSError, match="injected crash"):
+        run()
+    monkeypatch.undo()
+    assert not os.path.exists(path), "test premise: live table retired"
+
+    run()
+    got = spark.read.parquet(path)
+    assert got.count() == n
+    assert got.agg(F.sum("id")).collect()[0][0] == n * (n - 1) // 2
+    leftovers = [
+        d
+        for d in os.listdir(tmp_path)
+        if d.startswith(("table._stage_", "table._old_"))
+    ]
+    assert leftovers == [], f"stranded dirs not cleaned up: {leftovers}"
 
 
 def test_backfill_overwrites_only_target_partitions(spark, tmp_path, sf_dir):

@@ -507,3 +507,48 @@ def test_registry_wide_plan_guards(spark):
                 nl_offenders.append(name)
     assert not window_offenders, f"single-partition windows: {window_offenders}"
     assert not nl_offenders, f"unadjudicated nested loops: {nl_offenders}"
+
+
+def _agg_section(nid: int, header: str, keys: str) -> str:
+    """One aggregate's detail section in formatted-explain layout."""
+    return f"({nid}) {header}\nInput [1]: [x#1L]\n{keys}\nFunctions [1]: [f(x#1L)]\n\n"
+
+
+@pytest.mark.parametrize(
+    "generate, header, keys, label",
+    [
+        (False, "ObjectHashAggregate", "Keys [1]: [t#3L]", "agg"),
+        (True, "ObjectHashAggregate", "Keys [1]: [t#3L]", "agg?"),
+        (False, "HashAggregate [codegen id : 1]", "Keys: []", "scalar"),
+    ],
+    ids=["keyed_aggregate", "keyed_aggregate_under_generate", "global_aggregate"],
+)
+def test_nested_loop_audit_labels_build_side(generate, header, keys, label):
+    """tools/dump_plans.py's per-join prover on a hand-written
+    formatted-explain snippet (no Spark): a keyed aggregate on the
+    build side is bounded ('agg'); the same aggregate under a Generate
+    (explode(collect_list(..))) can be data-sized, so it is unproven
+    ('agg?'); a codegen'd global aggregate ('Keys: []') is one row."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).parents[1] / "tools" / "dump_plans.py"
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    dump_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plans)
+    op = header.split()[0]
+    pad = "   " if generate else ""
+    plan = (
+        "== Physical Plan ==\n"
+        "* BroadcastNestedLoopJoin Cross BuildRight (9)\n"
+        ":- * Range (1)\n"
+        "+- BroadcastExchange (8)\n"
+        + ("   +- * Generate (7)\n" if generate else "")
+        + f"{pad}   +- {op} (6)\n"
+        f"{pad}      +- Exchange (5)\n"
+        f"{pad}         +- {op} (4)\n"
+        f"{pad}            +- * Range (3)\n\n\n"
+        + _agg_section(4, header, keys)
+        + _agg_section(6, header, keys)
+    )
+    assert dump_plans.classify_nested_loops(plan) == label

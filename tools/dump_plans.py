@@ -177,12 +177,15 @@ def _children(tree: list[tuple[int, int, str]], idx: int) -> list[int]:
 
 def _agg_keys(plan: str, nid: int) -> int | None:
     """Grouping-key count of the (nid) HashAggregate/ObjectHashAggregate
-    detail section, or None if node nid is not an aggregate."""
+    detail section, or None if node nid is not an aggregate. The header
+    may carry a codegen id, and a global aggregate prints ``Keys: []``;
+    the match stays inside the node's own section (no blank line)."""
     m = re.search(
-        rf"\({nid}\) (?:\w*HashAggregate|SortAggregate)\w*\n(?:.*\n)*?Keys \[(\d+)\]",
+        rf"\({nid}\) (?:\w*HashAggregate|SortAggregate)\w*"
+        rf"(?: \[codegen id : \d+\])?\n(?:.+\n)*?Keys(?: \[(\d+)\])?:",
         plan,
     )
-    return int(m.group(1)) if m else None
+    return int(m.group(1) or 0) if m else None
 
 
 def _side_bound(plan: str, tree, idx: int) -> str | None:
@@ -190,8 +193,11 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
     'scalar' if its output is a global aggregate (exactly 1 row,
     possibly exploded over a generated bounded sequence), 'agg' if it
     is an aggregate keyed on derived columns (distinct-of-enum-sized),
-    None if it is data-sized."""
+    'agg?' if that keyed aggregate is reached through a Generate (an
+    explode of collect_list(..) over it is data-sized, which the plan
+    cannot rule out), None if it is data-sized."""
     ids = _subtree(tree, idx)
+    agg = "agg"
     # walk down through pass-through nodes to the first "real" operator
     for j in range(idx, idx + len(ids)):
         nid, _, text = tree[j]
@@ -204,10 +210,12 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
         if keys == 0:
             return "scalar"
         if keys is not None:
-            return "agg"
+            return agg
         if op == "Generate":
-            # explode over a generated sequence: bounded iff what it
-            # explodes FROM is bounded — keep walking
+            # explode: bounded iff what it explodes FROM is bounded and
+            # the exploded arrays are — keep walking, but a keyed
+            # aggregate found below is no longer a proof
+            agg = "agg?"
             continue
         if op == "BroadcastNestedLoopJoin":
             # a cross of two bounded sides is bounded iff both are
@@ -216,7 +224,7 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
                 a = _side_bound(plan, tree, kids[0])
                 b = _side_bound(plan, tree, kids[1])
                 if a and b:
-                    return "agg"
+                    return "agg?" if "agg?" in (a, b) else agg
             return None
         return None
     return None
@@ -225,8 +233,9 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
 def classify_nested_loops(plan: str) -> str:
     """'no' when the plan has no nested-loop join; otherwise a
     per-join bounded-side proof ('scalar' = 1-row global-aggregate
-    broadcast, 'agg' = aggregate-keyed bounded side, 'YES' = a
-    data-sized side — a genuine scale risk)."""
+    broadcast, 'agg' = aggregate-keyed bounded side, 'agg?' = a keyed
+    aggregate under a Generate, unproven, 'YES' = a data-sized side —
+    a genuine scale risk)."""
     tree = _parse_tree(plan)
     labels: list[str] = []
     for i, (nid, _, text) in enumerate(tree):
@@ -333,13 +342,18 @@ def main() -> None:
         "  broadcast side is an aggregate keyed on a derived",
         "  low-cardinality column (the event-type enum in the gapfill",
         "  hour-spine cross; a cross of two bounded sides classifies as",
-        "  the weaker bound of the two), `YES` = a data-sized side — a",
-        "  genuine scale risk. The only YES rows are knn_brute_force",
+        "  the weaker bound of the two), `agg?` = a keyed aggregate",
+        "  reached through a `Generate` (an explode of a collected list",
+        "  over it can be data-sized, so the plan proves nothing), `YES`",
+        "  = a data-sized side — a genuine scale risk. The YES rows are",
+        "  knn_brute_force",
         "  (inherently cartesian by definition; knn_lsh_multiprobe /",
-        "  knn_ivf_auto are the registered scale paths) and",
-        "  retrieval_mmr_diversified's bounded depth-50 candidate cross",
-        "  (LIMIT-bounded, not data-sized — the classifier cannot see",
-        "  limits, documented here).",
+        "  knn_ivf_auto are the registered scale paths) and sides bounded",
+        "  by what the classifier cannot see (limits, fixed grids):",
+        "  retrieval_mmr_diversified's depth-50 candidate cross, the",
+        "  probe broadcasts of retrieval_hybrid_rrf and",
+        "  embedding_hard_negatives, and customer_pareto_curve_dd's",
+        "  99-point grid (adjudicated in tests/test_plans.py).",
         "",
         "## Excluded from the table (iterative: explain shows only the",
         "final round's lineage-truncated plan)",
