@@ -32,6 +32,7 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def recover_table(path: str) -> None:
@@ -75,14 +76,18 @@ def replace_table(df: DataFrame, path: str) -> None:
         shutil.move(stage, path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
     """The parquet table at ``path``, or None when it doesn't exist yet.
     Only PATH_NOT_FOUND means "no table": any other failure (corrupt
     footer, FS hiccup) propagates, so a micro-batch fails and is retried
     from the checkpoint instead of overwriting the table with just the
-    incoming batch."""
+    incoming batch. A ``schema`` skips inference, so a table whose
+    writes so far were all empty (no data files) reads as empty."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as exc:
         get_cond = getattr(exc, "getCondition", None) or exc.getErrorClass
         if (get_cond() or "") == "PATH_NOT_FOUND":

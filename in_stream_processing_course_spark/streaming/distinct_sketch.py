@@ -11,7 +11,7 @@ EXACTLY stream==batch: each micro-batch contributes its own sampled
 keys, and the keyed MERGE collapses cross-batch duplicates — no
 counters, no watermark, no state store at all (the foreachBatch body
 is stateless batch code; exactly-once comes from the sink's keyed
-idempotence under checkpoint replay, the dedup_gate convention).
+idempotence under checkpoint replay, the KeyedUpsertSink convention).
 
 Read side: distinct-count estimates per group (|sample| * 2^s) plus
 the 'ALL' row by set-UNION of the per-group samples — the

@@ -1,7 +1,7 @@
 """Streaming DSIR selection gate — the SELECTION counterpart of
 ``lm_gate`` (quality) and the sixth streaming-curation module on the
 train-once / maintain-continuously artifact contract (lm_gate =
-quality, drift = distribution, cm_sketch = frequency, dedup_gate =
+quality, drift = distribution, cm_sketch = frequency, ingest_dedup =
 novelty, kmeans_stats = refit statistics, this = target-domain
 selection). VERDICT r8 next-round #5.
 
@@ -28,7 +28,7 @@ the scoring arithmetic is shared with the batch query):
 - ``selected = weight > 0`` is a scan-level gate (no global top-k, no
   single-task sort);
 - one verdict row per document upserts through ``KeyedUpsertSink``
-  (doc_id-keyed) — idempotent under checkpoint replay, the dedup_gate
+  (doc_id-keyed) — idempotent under checkpoint replay, the KeyedUpsertSink
   restart convention.
 """
 

@@ -1,15 +1,16 @@
-"""Streaming incremental dedup — the ingest-time composition of
+"""Streaming near-dup gate — the ingest-time composition of
 :func:`..operators.dedup.minhash_index_matches`: every micro-batch of
 incoming documents is screened against the PERSISTED corpus band
 index; novel docs are admitted and their bands join the index, dup
-docs are quarantined with their matched corpus id.
+docs are quarantined with their matched id.
 
 This is the continuous form of the reference's "process the stream,
 keep keyed long-term state" pattern (SURVEY §2.5) applied to corpus
 curation: state = the band index, but held as an append-only parquet
 table instead of the state store, because the index outlives any one
 query and is shared with batch jobs (the `dedup_incremental_new_docs`
-query reads the same band layout).
+query reads the same band layout: ``minhash_bands``' default 16
+hashes, 4 bands, 5-word shingles).
 
 Exactly-once: all three writes (admitted docs, quarantined dups, new
 index bands) are partitioned by ``batch_id`` and written with dynamic
@@ -26,13 +27,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..operators.dedup import minhash_bands, minhash_index_matches
 from ..sinks.upsert import read_table
 
 
 class IncrementalDedupIngest:
-    """foreachBatch target: screen, admit, quarantine, grow the index."""
+    """foreachBatch target: screen, admit, quarantine, grow the index.
+
+    Every arrival gets exactly one verdict. A doc is quarantined with
+    ``matched_doc_id`` = the least of its index match (min colliding id
+    in a strictly earlier batch) and the smallest colliding smaller id
+    in its own batch; otherwise it is admitted and its bands join the
+    index. Seed a corpus with ``gate(corpus_df, -1)``: stream batch ids
+    start at 0, so batch -1 is corpus to every stream batch, and the
+    corpus passes the same novelty rule as every later batch.
+    """
 
     def __init__(
         self,
@@ -41,23 +52,12 @@ class IncrementalDedupIngest:
         quarantine_path: str,
         id_col: str = "doc_id",
         text_col: str = "text",
-        num_hashes: int = 16,
-        bands: int = 4,
-        shingle_k: int = 5,
-        max_bucket_size: int | None = None,
     ) -> None:
         self.index_path = index_path
         self.admitted_path = admitted_path
         self.quarantine_path = quarantine_path
         self.id_col = id_col
         self.text_col = text_col
-        self.num_hashes = num_hashes
-        self.bands = bands
-        self.shingle_k = shingle_k
-        # quadratic guard for the in-batch self-join (same rationale as
-        # operators.dedup.minhash_candidates); the index-side join is
-        # already bounded by the min() aggregation
-        self.max_bucket_size = max_bucket_size
 
     @staticmethod
     def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
@@ -71,96 +71,51 @@ class IncrementalDedupIngest:
             .parquet(path)
         )
 
-    def _dedup_within_batch(
-        self, batch: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """Exact dups collapse to the min-id representative; then any
-        doc whose bands collide with a LOWER-id doc in the same batch
-        defers to it (greedy min-id near-dup pick — the same
-        representative rule the batch curation pipeline uses). Returns
-        (surviving docs, their band rows) — bands are computed ONCE per
-        batch and reused for the index screen."""
-        exact = (
-            batch.withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy(F.md5(self.text_col)).orderBy(self.id_col)
-                ),
-            )
-            .where(F.col("_rk") == 1)
-            .drop("_rk")
-        ).localCheckpoint()
-        bands = minhash_bands(
-            exact,
-            self.id_col,
-            self.text_col,
-            self.num_hashes,
-            self.bands,
-            self.shingle_k,
-        ).localCheckpoint()
-        joinable = bands
-        if self.max_bucket_size is not None:
-            sizes = joinable.groupBy("band_id", "band_key").agg(
-                F.count(F.lit(1)).alias("_bucket_n")
-            )
-            joinable = (
-                joinable.join(sizes, ["band_id", "band_key"])
-                .where(F.col("_bucket_n") <= self.max_bucket_size)
-                .drop("_bucket_n")
-            )
-        losers = (
-            joinable.alias("l")
-            .join(
-                joinable.alias("r"),
-                (F.col("l.band_id") == F.col("r.band_id"))
-                & (F.col("l.band_key") == F.col("r.band_key"))
-                & (F.col(f"l.{self.id_col}") < F.col(f"r.{self.id_col}")),
-            )
-            .select(F.col(f"r.{self.id_col}").alias(self.id_col))
-            .distinct()
-        )
-        return (
-            exact.join(losers, self.id_col, "left_anti"),
-            bands.join(losers, self.id_col, "left_anti"),
-        )
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch, new_bands = self._dedup_within_batch(batch_df)
-        batch = batch.localCheckpoint()
-        index = read_table(spark, self.index_path)
-        if index is not None:
+        doc = self.id_col
+        # banded once; read by the screen, the in-batch rule and the
+        # index growth
+        bands = minhash_bands(batch_df, doc, self.text_col).localCheckpoint()
+        # an explicit schema: an empty batch leaves an index partition
+        # with no data files, which schema inference cannot read
+        index_schema = StructType(
+            bands.schema.fields + [StructField("batch_id", IntegerType())]
+        )
+        index = read_table(spark, self.index_path, index_schema)
+        if index is None:
+            index = bands.limit(0)
+        else:
             # replay safety: a retried micro-batch must not screen
             # against the bands its own failed attempt already wrote —
             # only strictly earlier batches are corpus. Partition
             # pruning makes this a metadata filter, not a scan.
-            index = index.where(F.col("batch_id") < batch_id)
-        if index is None:
-            verdicts = new_bands.select(self.id_col).distinct().select(
-                self.id_col,
-                F.lit(None).cast("long").alias("matched_doc_id"),
-                F.lit(True).alias("is_novel"),
-            )
-        else:
-            verdicts = minhash_index_matches(
-                index.drop("batch_id"), new_bands, self.id_col
-            )
-        verdicts = verdicts.localCheckpoint()  # one screening pass, reused 3x
-        novel_ids = verdicts.where("is_novel").select(self.id_col)
+            index = index.where(F.col("batch_id") < batch_id).drop("batch_id")
+        screened = minhash_index_matches(index, bands, doc)
+        # in-batch rule, linear in the bucket size: the smallest
+        # colliding id below d is the min over d's buckets of each
+        # bucket's min id, where that min is below d
+        bucket_min = F.min(doc).over(Window.partitionBy("band_id", "band_key"))
+        in_batch = (
+            bands.withColumn("_m", bucket_min)
+            .groupBy(doc)
+            .agg(F.min(F.when(F.col("_m") < F.col(doc), F.col("_m"))).alias("_b"))
+        )
+        matched = F.least("matched_doc_id", "_b")
+        verdicts = (
+            screened.join(in_batch, doc)
+            .select(doc, matched.alias("matched_doc_id"), matched.isNull().alias("is_novel"))
+            .localCheckpoint()  # one screening pass, read 3x
+        )
+        novel_ids = F.broadcast(verdicts.where("is_novel").select(doc))
         self._write_partition(
-            batch.join(F.broadcast(novel_ids), self.id_col),
-            self.admitted_path,
-            batch_id,
+            batch_df.join(novel_ids, doc), self.admitted_path, batch_id
         )
         self._write_partition(
-            verdicts.where(~F.col("is_novel")),
-            self.quarantine_path,
-            batch_id,
+            verdicts.where(~F.col("is_novel")), self.quarantine_path, batch_id
         )
         self._write_partition(
-            new_bands.join(F.broadcast(novel_ids), self.id_col),
-            self.index_path,
-            batch_id,
+            bands.join(novel_ids, doc), self.index_path, batch_id
         )
 
     # -- read-side helpers ----------------------------------------------------

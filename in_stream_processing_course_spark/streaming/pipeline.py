@@ -25,7 +25,7 @@ from ..operators.aggregations import ip_window_stats
 from ..operators.projections import action_counters, filter_bots
 from ..sinks.compaction import rewrite_parquet_dir
 from ..sinks.upsert import KeyedUpsertSink
-from ..streaming.runner import start_foreach_batch
+from ..streaming.runner import start_foreach_batch, start_triggered
 from ..streaming.state import keyed_history_verdicts
 
 WATERMARK = "2 minutes"  # ImplStructured.scala:11
@@ -126,11 +126,7 @@ def start_raw_event_cache(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=trigger_seconds)
-    return writer.start()
+    return start_triggered(writer, available_now, trigger_seconds)
 
 
 def expire_raw_events(spark, path: str, retention_sec: int = 60) -> int:

@@ -2,7 +2,7 @@
 ``dsir_gate`` (n-gram target-likeness) and the seventh
 streaming-curation module on the train-once / maintain-continuously
 artifact contract (lm_gate = quality, drift = distribution, cm_sketch
-= frequency, dedup_gate = novelty, kmeans_stats = refit statistics,
+= frequency, ingest_dedup = novelty, kmeans_stats = refit statistics,
 dsir_gate = target-domain selection, this = linear readout over the
 embedding column).
 
@@ -21,12 +21,12 @@ the margin arithmetic is shared with the batch query):
   construction and inlined as an array literal, so scoring is pure
   per-row Column algebra: scan -> project, NO join, NO shuffle, NO
   state store (the gate is stateless by design — novelty/frequency
-  state lives in dedup_gate/cm_sketch);
+  state lives in ingest_dedup/cm_sketch);
 - ``selected = margin > threshold`` is a scan-level gate (no global
   top-k, no single-task sort);
 - one verdict row per vector upserts through ``KeyedUpsertSink``
   (vec_id-keyed) — idempotent under checkpoint replay, the
-  dedup_gate/dsir_gate restart convention.
+  dsir_gate restart convention.
 
 Calibration drift (VERDICT r9 next-round #6): the gate freezes the
 threshold at fit time, so a deployment needs to notice when the

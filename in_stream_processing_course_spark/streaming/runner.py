@@ -13,7 +13,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def await_drained(
@@ -78,6 +78,21 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
+def start_triggered(
+    writer: DataStreamWriter,
+    available_now: bool,
+    trigger_seconds: str | None = None,
+) -> StreamingQuery:
+    """Start ``writer``: drain the backlog and stop (``available_now``),
+    run on a ``trigger_seconds`` processing-time trigger, or run
+    micro-batches back to back (neither)."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=trigger_seconds)
+    return writer.start()
+
+
 def start_foreach_batch(
     sdf: DataFrame,
     batch_fn,
@@ -87,18 +102,13 @@ def start_foreach_batch(
     trigger_seconds: str | None = None,
 ) -> StreamingQuery:
     """Start ``sdf`` into the checkpointed ``foreachBatch`` target
-    ``batch_fn``: drain the backlog and stop (``available_now``), or
-    run on a ``trigger_seconds`` processing-time trigger."""
+    ``batch_fn`` under :func:`start_triggered`'s trigger choice."""
     writer = (
         sdf.writeStream.foreachBatch(batch_fn)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=trigger_seconds)
-    return writer.start()
+    return start_triggered(writer, available_now, trigger_seconds)
 
 
 def run_stream_foreach_batch(

@@ -1,6 +1,9 @@
 """Local mirror of the driver's oracle comparison: run the Spark query
 and the DuckDB oracle SQL on the same parquet tables, compare
-row-count + column names + order-insensitive canonical value hash.
+row-count + column names + order-insensitive canonical value hash,
+and reject any Decimal output value (the reference comparison
+canonicalizes a Decimal differently on its two sides, so a DECIMAL
+column never matches; cast final columns to DOUBLE on both sides).
 """
 
 from __future__ import annotations
@@ -62,6 +65,10 @@ def compare_query(spark, query_fn, oracle: str, sf_dir: str) -> None:
     sdf = query_fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
+    # all rows, not a sample: a Decimal in a late sort position counts
+    decs = sorted({c for r in srows for c, v in zip(scols, r)
+                   if isinstance(v, decimal.Decimal)})
+    assert not decs, f"Decimal output columns {decs}: cast them to DOUBLE"
     ocols, orows = run_oracle(oracle, sf_dir)
     assert sorted(scols) == sorted(ocols), f"columns differ: {scols} vs {ocols}"
     assert len(srows) == len(orows), f"row count {len(srows)} vs {len(orows)}"

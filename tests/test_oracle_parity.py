@@ -18,6 +18,15 @@ def test_oracle_parity(spark, sf_dir, name):
     compare_query(spark, QUERIES[name], ORACLES[name], sf_dir)
 
 
+def test_compare_query_rejects_decimal_output(spark, sf_dir):
+    """A DECIMAL output column fails even when both sides agree: the
+    reference comparison canonicalizes a Decimal differently on its
+    two sides."""
+    sql = "SELECT CAST(1.50 AS DECIMAL(10, 2)) AS x"
+    with pytest.raises(AssertionError, match="Decimal output columns"):
+        compare_query(spark, lambda s, _: s.sql(sql), sql, sf_dir)
+
+
 def test_all_queries_run(spark, sf_dir):
     for name, fn in QUERIES.items():
         df = fn(spark, sf_dir)

@@ -520,15 +520,22 @@ def _agg_section(nid: int, header: str, keys: str) -> str:
         (False, "ObjectHashAggregate", "Keys [1]: [t#3L]", "agg"),
         (True, "ObjectHashAggregate", "Keys [1]: [t#3L]", "agg?"),
         (False, "HashAggregate [codegen id : 1]", "Keys: []", "scalar"),
+        (True, "HashAggregate [codegen id : 1]", "Keys: []", "agg?"),
     ],
-    ids=["keyed_aggregate", "keyed_aggregate_under_generate", "global_aggregate"],
+    ids=[
+        "keyed_aggregate",
+        "keyed_aggregate_under_generate",
+        "global_aggregate",
+        "global_aggregate_under_generate",
+    ],
 )
 def test_nested_loop_audit_labels_build_side(generate, header, keys, label):
     """tools/dump_plans.py's per-join prover on a hand-written
     formatted-explain snippet (no Spark): a keyed aggregate on the
-    build side is bounded ('agg'); the same aggregate under a Generate
+    build side is bounded ('agg'); a codegen'd global aggregate
+    ('Keys: []') is one row ('scalar'); either one under a Generate
     (explode(collect_list(..))) can be data-sized, so it is unproven
-    ('agg?'); a codegen'd global aggregate ('Keys: []') is one row."""
+    ('agg?')."""
     import importlib.util
     import pathlib
 

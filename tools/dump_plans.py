@@ -190,12 +190,12 @@ def _agg_keys(plan: str, nid: int) -> int | None:
 
 def _side_bound(plan: str, tree, idx: int) -> str | None:
     """Bounded-cardinality proof for the subtree at tree[idx]:
-    'scalar' if its output is a global aggregate (exactly 1 row,
-    possibly exploded over a generated bounded sequence), 'agg' if it
-    is an aggregate keyed on derived columns (distinct-of-enum-sized),
-    'agg?' if that keyed aggregate is reached through a Generate (an
-    explode of collect_list(..) over it is data-sized, which the plan
-    cannot rule out), None if it is data-sized."""
+    'scalar' if its output is a global aggregate (exactly 1 row), 'agg'
+    if it is an aggregate keyed on derived columns
+    (distinct-of-enum-sized), 'agg?' if either aggregate is reached
+    through a Generate (an explode of collect_list(..) over it is
+    data-sized, which the plan cannot rule out), None if it is
+    data-sized."""
     ids = _subtree(tree, idx)
     agg = "agg"
     # walk down through pass-through nodes to the first "real" operator
@@ -208,13 +208,13 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
             continue
         keys = _agg_keys(plan, nid)
         if keys == 0:
-            return "scalar"
+            return "scalar" if agg == "agg" else agg
         if keys is not None:
             return agg
         if op == "Generate":
             # explode: bounded iff what it explodes FROM is bounded and
-            # the exploded arrays are — keep walking, but a keyed
-            # aggregate found below is no longer a proof
+            # the exploded arrays are — keep walking, but an aggregate
+            # found below is no longer a proof
             agg = "agg?"
             continue
         if op == "BroadcastNestedLoopJoin":
@@ -233,7 +233,7 @@ def _side_bound(plan: str, tree, idx: int) -> str | None:
 def classify_nested_loops(plan: str) -> str:
     """'no' when the plan has no nested-loop join; otherwise a
     per-join bounded-side proof ('scalar' = 1-row global-aggregate
-    broadcast, 'agg' = aggregate-keyed bounded side, 'agg?' = a keyed
+    broadcast, 'agg' = aggregate-keyed bounded side, 'agg?' = an
     aggregate under a Generate, unproven, 'YES' = a data-sized side —
     a genuine scale risk)."""
     tree = _parse_tree(plan)
@@ -342,9 +342,10 @@ def main() -> None:
         "  broadcast side is an aggregate keyed on a derived",
         "  low-cardinality column (the event-type enum in the gapfill",
         "  hour-spine cross; a cross of two bounded sides classifies as",
-        "  the weaker bound of the two), `agg?` = a keyed aggregate",
-        "  reached through a `Generate` (an explode of a collected list",
-        "  over it can be data-sized, so the plan proves nothing), `YES`",
+        "  the weaker bound of the two), `agg?` = a keyed or global",
+        "  aggregate reached through a `Generate` (an explode of a",
+        "  collected list over it can be data-sized, so the plan proves",
+        "  nothing), `YES`",
         "  = a data-sized side — a genuine scale risk. The YES rows are",
         "  knn_brute_force",
         "  (inherently cartesian by definition; knn_lsh_multiprobe /",
